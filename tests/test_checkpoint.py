@@ -101,6 +101,33 @@ def test_crash_between_blocks_write_and_manifest_append(spark, tmp_path):
     df.unpersist()
 
 
+def test_resume_rollup_survives_unreadable_manifest(spark, tmp_path, monkeypatch):
+    """A manifest that exists but fails its driver-side read must not be
+    taken as empty: the resume rollup then falls back to the distributed
+    anti-join, and no done unit gets a second lineage row."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "enc5")
+    df = tokens_dataframe(spark, 600, variant="low_card", n_partitions=2)
+    man = CodecManifest.auto_for(df.schema, block_rows=256)
+    encode_dataset(df, path, man, n_units=4, only_units=[0, 1])
+
+    real = pq.read_table
+    mdir = os.path.join(path, "manifest")
+
+    def flaky(source, *a, **kw):
+        if str(source) == mdir and kw.get("columns") == ["unit_id"]:
+            raise OSError("injected manifest read failure")
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_table", flaky)
+    m = encode_dataset(df, path, man, n_units=4)
+    monkeypatch.undo()
+    units = pq.read_table(mdir).column("unit_id").to_pylist()
+    assert sorted(units) == [0, 1, 2, 3]  # one lineage row per unit
+    assert m["units"] == 4 and m["rows"] == 600
+
+
 def test_manifest_sidecar_written(spark, tmp_path):
     path = str(tmp_path / "enc3")
     df = tokens_dataframe(spark, 500, n_partitions=2)
@@ -403,7 +430,7 @@ def test_upsert_rows_crash_windows_repair_on_rerun(spark, tmp_path, monkeypatch)
     df.unpersist()
 
 
-def test_lookup_rows_prunes_to_affected_units(spark, tmp_path):
+def test_lookup_rows_prunes_to_affected_units(spark, tmp_path, monkeypatch):
     """Point reads decode only the units the ids hash into: the executed
     plan's PartitionFilters must pin the pruning, results must equal the
     semi-joined input, and absent ids return no row."""
@@ -411,10 +438,14 @@ def test_lookup_rows_prunes_to_affected_units(spark, tmp_path):
     df = tokens_dataframe(spark, 2000, variant="low_card", n_partitions=4).cache()
     encode_dataset(df, path, CodecManifest.auto_for(df.schema, block_rows=512), n_units=8)
 
+    import xml2arrow_spark.operators.checkpoint as cp
     from xml2arrow_spark.operators.checkpoint import lookup_rows
 
     wanted = [r["doc_id"] for r in df.select("doc_id").limit(7).collect()]
+    # the distributed path (size valve at 0): the plan is where it prunes
+    monkeypatch.setattr(cp, "LOOKUP_LOCAL_BYTES", 0)
     got = lookup_rows(_ids_df(spark, wanted + ["no_such_doc"]), path)
+    monkeypatch.undo()
     expect = df.join(_ids_df(spark, wanted), "doc_id", "left_semi")
     assert verify_roundtrip(expect, got)["ok"]
     assert got.count() == 7
@@ -423,6 +454,30 @@ def test_lookup_rows_prunes_to_affected_units(spark, tmp_path):
     # (df.inputFiles ignores pruning — round-4 gotcha — so read the plan)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "unit_id" in plan
+
+    # the driver-local path (default valve on this small store) opens
+    # only the block files of the units the ids hash into
+    import pyarrow.parquet as pq
+
+    opened = []
+    real = pq.ParquetFile
+
+    def spy(source, *a, **kw):
+        opened.append(str(source))
+        return real(source, *a, **kw)
+
+    units = {
+        r["unit_id"] for r in plan_units(_ids_df(spark, wanted), 8).collect()
+    }
+    monkeypatch.setattr(pq, "ParquetFile", spy)
+    local = lookup_rows(_ids_df(spark, wanted + ["no_such_doc"]), path)
+    monkeypatch.undo()
+    assert verify_roundtrip(expect, local)["ok"]
+    blocks_opened = [f for f in opened if os.sep + "blocks" + os.sep in f]
+    assert blocks_opened
+    assert {
+        int(f.split("unit_id=")[1].split(os.sep)[0]) for f in blocks_opened
+    } == units < set(range(8))
     df.unpersist()
 
 

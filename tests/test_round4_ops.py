@@ -267,6 +267,21 @@ def test_near_dup_local_valves_fall_through(spark, tmp_path):
         spark, str(tmp_path / "v2"), "doc", 800, None, max_local_pairs=10
     )
     assert loc is None
+    # (c) two sig rows for one id in a single batch: the local helper
+    # declines, and the default call still equals the distributed shape
+    dup = _docs_df(
+        spark, [(i, BOILER) for i in range(4)] + [(2, BOILER + " once more")]
+    )
+    a = dedup.lsh_near_dup_pairs(dup, sig_path=str(tmp_path / "d1"))
+    assert dedup._near_dup_pairs_store_local(
+        spark, str(tmp_path / "d1"), "doc", 800, None
+    ) is None
+    b = dedup.lsh_near_dup_pairs(
+        dup, sig_path=str(tmp_path / "d2"), local_threshold_bytes=0
+    )
+    assert a.schema == b.schema
+    ra = sorted(map(tuple, a.collect()))
+    assert ra == sorted(map(tuple, b.collect())) and len(ra) > 0
 
 
 def test_max_cell_drop_telemetry(spark, tmp_path):

@@ -30,7 +30,25 @@ from xml2arrow_spark.codecs import (
 )
 from xml2arrow_spark.errors import ManifestError
 
-__all__ = ["ColumnPolicy", "CodecManifest", "ManifestError"]
+__all__ = [
+    "ColumnPolicy", "CodecManifest", "ManifestError", "load_yaml", "read_sidecar",
+]
+
+
+def load_yaml(text: str):
+    """``yaml.safe_load`` semantics through libyaml's ``CSafeLoader`` when
+    the build has it (~10x faster on the engine's sidecars, which every
+    read and mutation parses), else the pure-Python ``SafeLoader``."""
+    import yaml
+
+    return yaml.load(text, Loader=getattr(yaml, "CSafeLoader", yaml.SafeLoader))
+
+
+def read_sidecar(path: str) -> dict:
+    """Parse a YAML sidecar file (``_manifest.yaml``, ``_bloom.yaml``, ...);
+    an empty file reads as ``{}``."""
+    with open(path) as f:
+        return load_yaml(f.read()) or {}
 
 AUTO = "auto"
 LIST_VALUE_SUFFIX = ""  # list columns carry one policy; lengths always FOR-packed
@@ -188,9 +206,7 @@ class CodecManifest:
 
     @classmethod
     def from_yaml(cls, text: str) -> "CodecManifest":
-        import yaml
-
-        d = yaml.safe_load(text)
+        d = load_yaml(text)
         if not isinstance(d, dict):
             raise ManifestError("manifest YAML must be a mapping")
         return cls.from_dict(d)

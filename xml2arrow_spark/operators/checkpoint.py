@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from xml2arrow_spark.manifest import CodecManifest
+from xml2arrow_spark.manifest import CodecManifest, read_sidecar
 from xml2arrow_spark.operators import bloomidx, tombstones
 from xml2arrow_spark.operators.encode import decode_table, encode_table
 from xml2arrow_spark.operators.lease import with_dataset_lease
@@ -89,28 +89,29 @@ def completed_units(spark: SparkSession, path: str) -> DataFrame:
         )
 
 
-def _check_placement(path: str, n_units: int, schema_ddl: str) -> None:
+def _check_placement(
+    path: str, n_units: int, schema_ddl: str, side: dict | None = None
+) -> None:
     """Refuse to resume a dataset whose row->unit placement would differ
     from this run's: the hash function identity (PLACEMENT_ID), the unit
     COUNT (pmod modulus — a different n_units reassigns every row, so
     completed-unit markers stop covering the same row sets), and the
     encoded column set (mixed blocks schemas would surface as decode
-    errors on half the dataset)."""
-    import yaml
-
+    errors on half the dataset). ``side`` is the already-parsed sidecar
+    when the caller has it (one parse per operator call)."""
     from xml2arrow_spark.errors import ManifestError
 
-    spath = os.path.join(path, MANIFEST_SIDEVAR)
-    if not os.path.exists(spath):
-        if os.path.exists(os.path.join(path, "manifest")):
-            raise ManifestError(
-                f"dataset at {path!r} has a manifest table but no "
-                f"{MANIFEST_SIDEVAR} sidecar (pre-placement-tag layout); "
-                f"cannot verify unit placement — re-encode from scratch"
-            )
-        return
-    with open(spath) as f:
-        side = yaml.safe_load(f.read()) or {}
+    if side is None:
+        spath = os.path.join(path, MANIFEST_SIDEVAR)
+        if not os.path.exists(spath):
+            if os.path.exists(os.path.join(path, "manifest")):
+                raise ManifestError(
+                    f"dataset at {path!r} has a manifest table but no "
+                    f"{MANIFEST_SIDEVAR} sidecar (pre-placement-tag layout); "
+                    f"cannot verify unit placement — re-encode from scratch"
+                )
+            return
+        side = read_sidecar(spath)
     found = side.get("placement")
     if found != PLACEMENT_ID:
         raise ManifestError(
@@ -325,22 +326,26 @@ def encode_dataset(
     import pyarrow.parquet as _pq
 
     blocks_root = os.path.join(path, "blocks")
+    mdir = os.path.join(path, "manifest")
     try:
         done_ids = set(
-            _pq.read_table(
-                os.path.join(path, "manifest"), columns=["unit_id"]
-            )
-            .column("unit_id")
-            .to_pylist()
+            _pq.read_table(mdir, columns=["unit_id"]).column("unit_id").to_pylist()
         )
     except Exception:
-        done_ids = set()
+        # no manifest yet = nothing done. A manifest that EXISTS but will
+        # not read driver-side must not pass for empty: every done unit
+        # would be rolled up again (duplicate lineage rows) — the
+        # distributed anti-join against `done` decides instead
+        done_ids = None if os.path.isdir(mdir) and os.listdir(mdir) else set()
     on_disk = {
         int(d.split("=", 1)[1])
         for d in os.listdir(blocks_root)
         if d.startswith("unit_id=")
     } if os.path.isdir(blocks_root) else set()
-    local_rows = _unit_rollup_local(blocks_root, on_disk - done_ids)
+    local_rows = (
+        None if done_ids is None
+        else _unit_rollup_local(blocks_root, on_disk - done_ids)
+    )
     if local_rows is not None:
         meta_rows = local_rows
     else:
@@ -392,16 +397,15 @@ def encode_dataset(
     }
 
 
-def _resolve_columns(path: str, columns, id_col: str):
+def _resolve_columns(path: str, columns, id_col: str, side: dict | None = None):
     """Shared column resolution for the read paths: requested (or all)
     columns routed to their owning tree — base or a column family.
+    ``side`` is the parsed sidecar when the caller already has it.
     Returns (columns, base_cols, base_want, fams, fam_want)."""
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
-    with open(os.path.join(path, MANIFEST_SIDEVAR)) as f:
-        side = yaml.safe_load(f.read())
+    if side is None:
+        side = read_sidecar(os.path.join(path, MANIFEST_SIDEVAR))
     base_cols = split_schema_ddl(side["schema_ddl"])  # decimal(p,0)-safe
     fams = list_families(path)
     fam_cols = {c: fam for fam, cols in fams.items() for c in cols
@@ -522,19 +526,20 @@ def _heal_torn_swap(path: str) -> None:
             shutil.rmtree(leftover)
 
 
-def _load_sidecar(path: str) -> tuple[CodecManifest, str, int, list[str] | None]:
+def _load_sidecar(
+    path: str, side: dict | None = None
+) -> tuple[CodecManifest, str, int, list[str] | None]:
     """Resolved codec manifest + encoded-column DDL + unit count + presort
     of an existing dataset, placement-checked. The sidecar IS the manifest
     yaml plus placement keys; ``from_dict`` tolerates the extras, so
     mutations re-encode with the exact codecs (and clustering) of the
-    original run (never a re-resolved guess)."""
-    import yaml
-
-    with open(os.path.join(path, MANIFEST_SIDEVAR)) as f:
-        side = yaml.safe_load(f.read())
+    original run (never a re-resolved guess). The file is parsed once;
+    pass ``side`` when the caller already parsed it."""
+    if side is None:
+        side = read_sidecar(os.path.join(path, MANIFEST_SIDEVAR))
     n_units = int(side["n_units"])
     ddl = side["schema_ddl"]
-    _check_placement(path, n_units, ddl)
+    _check_placement(path, n_units, ddl, side)
     return CodecManifest.from_dict(side), ddl, n_units, side.get("presort")
 
 
@@ -868,6 +873,10 @@ def upsert_rows(rows: DataFrame, path: str, id_col: str = "doc_id") -> dict:
 
 
 LOOKUP_PRUNE_MAX_IDS = 4096
+# lookup_rows' driver-local size valve: the affected units' block files
+# (base plus requested families) must total at most this; 0 forces the
+# distributed path
+LOOKUP_LOCAL_BYTES = 128 << 20
 
 
 def lookup_rows(
@@ -900,32 +909,60 @@ def lookup_rows(
 
     Absent ids simply return no row. The final semi-join is broadcast: a
     lookup batch is ids-only and small by construction (bulk retrieval is
-    read_encoded_dataset's job)."""
+    read_encoded_dataset's job).
+
+    Driver-local path: when the batch is ≤ LOOKUP_PRUNE_MAX_IDS non-NULL
+    ids, the store is a local directory, and the affected units' block
+    files (base plus every requested family) total at most
+    ``LOOKUP_LOCAL_BYTES``, the same four prunes, the tombstone anti-join
+    and the family left join run on the driver with pyarrow — one unit
+    file at a time — and the result is an Arrow-backed LocalTableScan. A
+    point read moves KB, so the decode jobs and their plan construction
+    were the whole cost. ``LOOKUP_LOCAL_BYTES = 0`` forces the distributed
+    path; a batch holding a NULL id always takes it (the Bloom prune and
+    the joins then keep their SQL NULL semantics without a second
+    implementation)."""
     from xml2arrow_spark.operators.encode import prune_blocks_any
 
     spark = ids.sparkSession
-    _, _ddl, n_units, _presort = _load_sidecar(path)
+    side = read_sidecar(os.path.join(path, MANIFEST_SIDEVAR))
+    _, _ddl, n_units, _presort = _load_sidecar(path, side)
     columns, base_cols, base_want, fams, fam_want = _resolve_columns(
-        path, columns, id_col
+        path, columns, id_col, side
     )
-    ids = ids.select(id_col).distinct()
-    # one job yields BOTH pruning inputs (point reads are latency-bound:
-    # every extra Spark job is a fixed cost the batch can't amortize)
-    id_rows = plan_units(ids, n_units, id_col).limit(
-        LOOKUP_PRUNE_MAX_IDS + 1
-    ).collect()
-    if len(id_rows) <= LOOKUP_PRUNE_MAX_IDS:
-        id_values = [r[id_col] for r in id_rows]
-        affected = sorted({r["unit_id"] for r in id_rows})
+    ids = ids.select(id_col)
+    # one action yields BOTH pruning inputs (point reads are latency-bound:
+    # every extra Spark job is a fixed cost the batch can't amortize). No
+    # distinct before the limit: over an Arrow-backed id batch the plan
+    # folds into a LocalRelation and collects without a job; repeated ids
+    # are dropped here, and only a batch with more raw rows than the cap
+    # pays the distinct to count its ids exactly
+    planned = plan_units(ids, n_units, id_col)
+    id_rows = planned.limit(LOOKUP_PRUNE_MAX_IDS + 1).collect()
+    if len(id_rows) > LOOKUP_PRUNE_MAX_IDS:
+        ids = ids.distinct()  # also the semi-join's broadcast build side
+        planned = plan_units(ids, n_units, id_col)
+        id_rows = planned.limit(LOOKUP_PRUNE_MAX_IDS + 1).collect()
+    id_units = dict.fromkeys((r[id_col], r["unit_id"]) for r in id_rows)
+    if len(id_units) <= LOOKUP_PRUNE_MAX_IDS:
+        id_values = [v for v, _u in id_units]
+        affected = sorted({u for _v, u in id_units})
     else:  # oversized batch: unit pruning only, units from their own agg
         id_values = None
         affected = sorted(
             r["unit_id"]
-            for r in plan_units(ids, n_units, id_col)
-            .select("unit_id")
+            for r in planned.select("unit_id")
             .distinct()
             .collect()  # bounded by n_units — metadata-scale
         )
+
+    if id_values is not None and None not in id_values and LOOKUP_LOCAL_BYTES:
+        local = _lookup_rows_local(
+            spark, path, id_col, columns, base_cols, base_want, fams,
+            fam_want, id_values, affected,
+        )
+        if local is not None:
+            return local
 
     def _pruned(blocks_dir: str):
         b = spark.read.parquet(blocks_dir).filter(
@@ -971,12 +1008,140 @@ def lookup_rows(
     return out.select(*columns)
 
 
+def _unit_block_files(tree: str, units: list[int]) -> list[tuple[int, str, int]] | None:
+    """``(unit_id, file, bytes)`` for every block file of ``units`` under
+    ``tree``, or None when ``tree/blocks`` is not a directory the driver
+    can see (a remote URI, a missing tree) — the size valve fails closed."""
+    bdir = os.path.join(tree, "blocks")
+    if not os.path.isdir(bdir):
+        return None
+    out = []
+    for u in units:
+        udir = os.path.join(bdir, f"unit_id={int(u)}")
+        if not os.path.isdir(udir):
+            continue
+        for name in sorted(os.listdir(udir)):
+            if name.endswith(".parquet") and not name.startswith((".", "_")):
+                f = os.path.join(udir, name)
+                out.append((int(u), f, os.path.getsize(f)))
+    return out
+
+
+def _decode_units_local(tree: str, files, ddl: str, id_col: str, id_values, units):
+    """Driver twin of ``decode_table(_pruned(tree/blocks), ddl,
+    row_filter=(id_col, id_values))`` in :func:`lookup_rows`: zone-map
+    containment, Bloom survivors (invalidated units stay unprunable), then
+    the shared per-block kernel with the exact row filter. Reads one unit
+    file at a time; returns a pyarrow Table typed by ``ddl``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from xml2arrow_spark.operators.encode import (
+        block_may_contain_any,
+        decode_block,
+        normalize_row_filters,
+    )
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    rfs = normalize_row_filters((id_col, id_values))
+    unprunable, survivors = (
+        bloomidx.bloom_survivors(tree, id_col, id_values, units) or (None, None)
+    )
+    parts = [schema.empty_table()]
+    for u, f, _size in files:
+        # row-level stores are nested-layout (encode_dataset never writes wide)
+        t = pq.ParquetFile(f).read(columns=["block_id", "cols"])
+        block_ids = t.column("block_id").to_pylist()
+        for row in range(t.num_rows):
+            if not block_may_contain_any(t, row, id_col, id_values):
+                continue
+            if survivors is not None and u not in unprunable and (
+                block_ids[row] not in survivors.get(u, ())
+            ):
+                continue
+            b = decode_block(t, row, schema.names, rfs)
+            if b is not None:
+                parts.append(pa.Table.from_batches([b]).cast(schema))
+    return pa.concat_tables(parts)
+
+
+def _left_join_take(left, right, key: str):
+    """``left LEFT JOIN right USING (key)`` over pyarrow tables by index
+    ``take`` (right-side keys are unique per batch in practice; repeats
+    multiply rows exactly like the SQL join). ``pa.Table.join`` is not an
+    option: Acero refuses list-typed non-key columns."""
+    import pyarrow as pa
+
+    pos: dict = {}
+    for j, v in enumerate(right.column(key).to_pylist()):
+        pos.setdefault(v, []).append(j)
+    li, ri = [], []
+    for i, v in enumerate(left.column(key).to_pylist()):
+        for j in pos.get(v, (None,)):
+            li.append(i)
+            ri.append(j)
+    lt = left.take(pa.array(li, pa.int64()))
+    rt = right.drop_columns([key]).take(pa.array(ri, pa.int64()))
+    return pa.Table.from_arrays(
+        lt.columns + rt.columns, names=lt.column_names + rt.column_names
+    )
+
+
+def _lookup_rows_local(
+    spark, path, id_col, columns, base_cols, base_want, fams, fam_want,
+    id_values, affected,
+):
+    """:func:`lookup_rows`'s driver-local path, or None when the size valve
+    routes the batch distributed (see the lookup_rows docstring)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructType
+
+    trees = {None: path}
+    trees.update({fam: os.path.join(path, "families", fam) for fam in fam_want})
+    files = {}
+    for fam, tree in trees.items():
+        files[fam] = _unit_block_files(tree, affected)
+        if files[fam] is None:
+            return None
+    if sum(sz for fs in files.values() for _u, _f, sz in fs) > LOOKUP_LOCAL_BYTES:
+        return None
+
+    base_sel = ([id_col] if id_col not in base_want else []) + base_want
+    out = _decode_units_local(
+        path, files[None], ", ".join(base_cols[c] for c in base_sel),
+        id_col, id_values, affected,
+    )
+    id_arr = pa.array(id_values, type=out.schema.field(id_col).type)
+    out = out.filter(pc.is_in(out[id_col], value_set=id_arr, skip_nulls=True))
+    tomb = tombstones.pending_ids_local(path, affected, id_col)
+    if tomb is not None:
+        dead = pa.concat_arrays([c.cast(id_arr.type) for c in tomb])
+        out = out.filter(
+            pc.invert(pc.is_in(out[id_col], value_set=dead, skip_nulls=True))
+        )
+    col_ddl = dict(base_cols)
+    for fam, cols in fam_want.items():
+        fdec = _decode_units_local(
+            trees[fam], files[fam],
+            ", ".join([fams[fam][id_col]] + [fams[fam][c] for c in cols]),
+            id_col, id_values, affected,
+        )
+        fdec = fdec.filter(
+            pc.is_in(fdec[id_col], value_set=id_arr, skip_nulls=True)
+        )
+        out = _left_join_take(out, fdec, id_col)
+        col_ddl.update({c: fams[fam][c] for c in cols})
+    schema = StructType.fromDDL(", ".join(col_ddl[c] for c in columns))
+    return spark.createDataFrame(out.select(columns), schema)
+
+
 def list_families(path: str) -> dict[str, dict[str, str]]:
     """Column families of an encoded dataset: ``{family: {col: "col type"}}``
     (the id column included), in sorted family order — the deterministic
     projection order read_encoded_dataset uses for ``columns=None``."""
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     fdir = os.path.join(path, "families")
@@ -985,8 +1150,7 @@ def list_families(path: str) -> dict[str, dict[str, str]]:
         for name in sorted(os.listdir(fdir)):
             spath = os.path.join(fdir, name, MANIFEST_SIDEVAR)
             if os.path.exists(spath):
-                with open(spath) as f:
-                    side = yaml.safe_load(f.read())
+                side = read_sidecar(spath)
                 out[name] = split_schema_ddl(side["schema_ddl"])
     return out
 

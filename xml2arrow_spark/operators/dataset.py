@@ -28,7 +28,7 @@ from typing import Iterator
 
 import pyarrow as pa
 
-from xml2arrow_spark.manifest import CodecManifest
+from xml2arrow_spark.manifest import CodecManifest, read_sidecar
 from xml2arrow_spark.operators.lease import with_dataset_lease as _with_dataset_lease
 from xml2arrow_spark.operators.predicates import (  # noqa: F401 (re-export)
     any_of,
@@ -166,7 +166,6 @@ def encode_parquet_dataset(
 
     # sidecar BEFORE the encode action (crash-safe placement tag; see
     # checkpoint.py::_check_placement for the rationale)
-    import yaml
 
     from xml2arrow_spark.errors import ManifestError
 
@@ -177,8 +176,7 @@ def encode_parquet_dataset(
     )
     spath = os.path.join(out_path, MANIFEST_SIDECAR)
     if os.path.exists(spath):
-        with open(spath) as f:
-            side = yaml.safe_load(f.read()) or {}
+        side = read_sidecar(spath)
         if side.get("placement") != PLACEMENT_ID:
             raise ManifestError(
                 f"dataset at {out_path!r} was written with unit placement "
@@ -398,15 +396,12 @@ def dataset_column_stats(spark, out_path: str):
     for free — the reader-side twin of parquet column statistics plus
     Spark's stats-based aggregate pushdown, at block granularity over the
     ENCODED payload."""
-    import yaml
-
     from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name_ddl = split_schema_ddl(side["schema_ddl"])
     names = list(by_name_ddl)
     # temporal columns NEVER surface sum_i (r06 correctness fix, inherited
@@ -824,8 +819,6 @@ def count_where(
     classification telemetry that makes the skip rates observable (the
     no-silent-caps rule).
     """
-    import yaml
-
     from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.encode import (
@@ -835,8 +828,7 @@ def count_where(
     from xml2arrow_spark.sources.files import plan_parquet_tasks
 
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     wide = side.get("layout", "nested") == "wide"
 
@@ -1558,16 +1550,13 @@ def group_count(
 
     Returns a DataFrame ``(column, cnt)`` with the column's original type.
     """
-    import yaml
-
     from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
     from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
 
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     if not isinstance(column, str):
         cols = list(column)
@@ -2235,8 +2224,6 @@ def group_aggs(
     ``(key, cnt, nn_<c>, sum_<c>, min_<c>, max_<c> [, sumsq_<c>] ...)``
     with the key's original type.
     """
-    import yaml
-
     from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.encode import split_schema_ddl
@@ -2245,8 +2232,7 @@ def group_aggs(
     if not agg_cols:
         raise ValueError("group_aggs needs at least one agg column")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     if not isinstance(key, str):
         keys = list(key)
@@ -2806,16 +2792,13 @@ def top_k(
     Returns a DataFrame with one column (the original name and type), k
     rows, sorted in rank order.
     """
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
     from xml2arrow_spark.sources.files import parquet_file_infos, plan_parquet_tasks
 
     if k < 1:
         raise ValueError(f"top_k needs k >= 1, got {k}")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     conj = (
         _resolve_conjuncts(by_name, where, "top_k")
@@ -3238,8 +3221,6 @@ def exact_quantiles(
     Returns a DataFrame ``(q_milli bigint, value <column type>)``, one
     row per requested quantile, in the requested order.
     """
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     qs = list(q_milli)
@@ -3275,8 +3256,7 @@ def exact_quantiles(
             out_q.append(q)
             out_v.append(values[bisect.bisect_left(cums, rank)])
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     vtype = by_name[column].split(None, 1)[1]
     # arrow-backed LocalRelation — see group_count's local finish
@@ -3332,15 +3312,12 @@ def value_histogram(
     Returns a DataFrame ``(bin bigint, cnt bigint)``, non-empty bins
     only, ordered by bin.
     """
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     if n_bins < 1:
         raise ValueError(f"value_histogram needs n_bins >= 1, got {n_bins}")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     if column not in by_name:
         raise ValueError(
@@ -3422,8 +3399,6 @@ def time_bucket_count(
     buckets only, ordered by bucket; ``bucket_start = origin +
     bucket * width`` (ticks) for direct rendering.
     """
-    import yaml
-
     from pyspark.sql import functions as F
 
     from xml2arrow_spark.operators.blocks import value_counts_column
@@ -3435,8 +3410,7 @@ def time_bucket_count(
     if not isinstance(origin, int) or isinstance(origin, bool):
         raise ValueError(f"origin must be a tick int, got {origin!r}")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     if column not in by_name:
         raise ValueError(
@@ -4086,15 +4060,12 @@ def recluster_dataset(
     """
     import shutil
 
-    import yaml
-
     from xml2arrow_spark.operators.encode import split_schema_ddl
 
     presort = list(presort or [])
     if not presort:
         raise ValueError("recluster_dataset needs at least one presort column")
-    with open(os.path.join(src_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(src_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     missing = [c for c in presort if c not in by_name]
     if missing:
@@ -4190,11 +4161,9 @@ def decode_dataset(
     per-disjunct masks OR; only a block NO disjunct matches skips). Pair
     with the corresponding ``zone_filter`` so non-overlapping blocks
     never reach the kernel at all."""
-    import yaml
-
     from xml2arrow_spark.operators.encode import (
         _zone_suffixes,
-        apply_row_filters,
+        decode_block,
         normalize_row_filters,
         normalize_zone_filters,
         split_schema_ddl,
@@ -4202,8 +4171,7 @@ def decode_dataset(
     from xml2arrow_spark.sources.files import plan_parquet_tasks
 
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])  # decimal(p,0)-safe
     if columns is None:
         out_names = list(by_name)
@@ -4297,43 +4265,16 @@ def decode_dataset(
                                     g = one if g is None else (g & one)
                                 expr = g if expr is None else (expr | g)
                         kwargs["filters"] = expr
-                    tbl = pq.read_table(fpath, columns=need, **kwargs)  # pruned IO
-                    metas = {n: tbl.column(f"c_{n}__meta").combine_chunks()
-                             for n in read_names}
-                    datas = {n: tbl.column(f"c_{n}__data").combine_chunks()
-                             for n in read_names}
+                    tbl = pq.read_table(
+                        fpath, columns=need, **kwargs  # pruned IO
+                    ).combine_chunks()
                     for row in range(tbl.num_rows):
-                        fr = apply_row_filters(
-                            rfs,
-                            lambda c: (
-                                metas[c][row].as_py(), datas[c][row].as_py()
-                            ),
-                            out_names,
-                        )
-                        if fr is None:
-                            continue  # zero matches: skip other kernels
-                        mask, selected = fr
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                selected[n] if n in selected else (
-                                    decode_column(
-                                        metas[n][row].as_py(),
-                                        datas[n][row].as_py(),
-                                    ).filter(mask)
-                                    if mask is not None
-                                    else decode_column(
-                                        metas[n][row].as_py(),
-                                        datas[n][row].as_py(),
-                                    )
-                                )
-                                for n in out_names
-                            ],
-                            names=out_names,
-                        )
+                        out = decode_block(tbl, row, out_names, rfs)
+                        if out is not None:
+                            yield out
                     continue
-                tbl = pq.read_table(fpath, columns=["cols"])
-                cols_col = tbl.column("cols").combine_chunks()
-                wanted = set(out_names)
+                tbl = pq.read_table(fpath, columns=["cols"]).combine_chunks()
+                cols_col = tbl.column("cols")
                 for row in range(len(cols_col)):
                     entries = cols_col[row].values  # zero-copy struct view
                     names = entries.field("name").to_pylist()
@@ -4360,26 +4301,9 @@ def decode_dataset(
                         )
                     if pruned:
                         continue  # whole block pruned before any kernel
-                    metas = entries.field("meta")
-                    datas = entries.field("data")
-                    fr = apply_row_filters(
-                        rfs,
-                        lambda c: (
-                            metas[names.index(c)].as_py(),
-                            datas[names.index(c)].as_py(),
-                        ),
-                        out_names,
-                    )
-                    if fr is None:
-                        continue  # zero matches: skip other kernels
-                    mask, decoded = fr
-                    for i, nm in enumerate(names):
-                        if nm in wanted and nm not in decoded:
-                            arr = decode_column(metas[i].as_py(), datas[i].as_py())
-                            decoded[nm] = arr.filter(mask) if mask is not None else arr
-                    yield pa.RecordBatch.from_arrays(
-                        [decoded[n] for n in out_names], names=out_names
-                    )
+                    out = decode_block(tbl, row, out_names, rfs)
+                    if out is not None:
+                        yield out
 
     tasks = plan_parquet_tasks(spark, os.path.join(out_path, "blocks"), n_tasks)
     return tasks.mapInArrow(decode_files, ddl)

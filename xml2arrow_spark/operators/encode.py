@@ -41,6 +41,8 @@ __all__ = [
     "encode_parquet",
     "encode_parquet_tasks",
     "decode_table",
+    "decode_block",
+    "block_may_contain_any",
     "prune_blocks",
     "prune_blocks_any",
     "prune_blocks_dnf",
@@ -926,6 +928,31 @@ def prune_blocks_any(blocks_df, column: str, values: list):
     return blocks_df.filter(keep)
 
 
+def block_may_contain_any(block, row: int, column: str, values: list) -> bool:
+    """Driver-side twin of :func:`prune_blocks_any` for ONE block row of a
+    nested-layout (``cols``) pyarrow batch/table: True unless the block's
+    [vmin, vmax] for ``column`` provably contains NONE of ``values``. Same
+    conservative contract — a missing stats entry or a NULL bound keeps
+    the block, and truncated string bounds can only over-keep; a bound
+    not comparable with the values also keeps."""
+    if not values:
+        return True
+    entries = block.column("cols")[row].values
+    names = entries.field("name").to_pylist()
+    if column not in names:
+        return True
+    i = names.index(column)
+    suffix_min, suffix_max = _zone_suffixes(values[0], values[0])
+    vmin = entries.field(suffix_min)[i].as_py()
+    vmax = entries.field(suffix_max)[i].as_py()
+    if vmin is None or vmax is None:
+        return True
+    try:
+        return any(vmin <= v <= vmax for v in values)
+    except TypeError:
+        return True
+
+
 def normalize_row_filters(row_filter) -> list[tuple]:
     """Validate and split a row_filter spec into a CONJUNCTION list of
     ``(col, values|None, lo, hi)``: each conjunct is a 2-tuple
@@ -1032,6 +1059,53 @@ def apply_row_filters(rfs, pair, out_names):
     return mask, {}
 
 
+def decode_block(block, row: int, out_names: list[str], rfs):
+    """Decode ONE block row of a pyarrow batch/table into a RecordBatch of
+    ``out_names`` — the single per-block body behind every decode path
+    (:func:`decode_table`'s mapInArrow kernel, ``decode_dataset``'s file
+    scan, and the driver-local point lookup). ``block`` holds the blocks
+    rows in either layout: nested (a ``cols`` array<struct> column) or
+    wide (``c_<name>__meta`` / ``c_<name>__data`` column pairs). The
+    row-filter conjunction ``rfs`` (:func:`normalize_row_filters`)
+    evaluates first, codec-aware; returns ``None`` when no row matches,
+    so the block skips every other kernel. Only the requested columns'
+    payload bytes are ever materialized."""
+    if "cols" in block.schema.names:
+        # zero-copy struct view of this block's entries (``as_py`` on the
+        # whole struct would copy every column's payload)
+        entries = block.column("cols")[row].values
+        names = entries.field("name").to_pylist()
+        missing = set(out_names) - set(names)
+        if missing:
+            # an explicit error (a bare KeyError from an executor is
+            # undiagnosable)
+            raise ValueError(
+                f"blocks table lacks encoded column(s) {sorted(missing)}; "
+                f"blocks contain {sorted(names)}"
+            )
+        metas, datas = entries.field("meta"), entries.field("data")
+
+        def pair(c):
+            i = names.index(c)
+            return metas[i].as_py(), datas[i].as_py()
+    else:
+        def pair(c):
+            return (
+                block.column(f"c_{c}__meta")[row].as_py(),
+                block.column(f"c_{c}__data")[row].as_py(),
+            )
+
+    fr = apply_row_filters(rfs, pair, out_names)
+    if fr is None:
+        return None
+    mask, decoded = fr
+    for n in out_names:
+        if n not in decoded:
+            arr = decode_column(*pair(n))
+            decoded[n] = arr.filter(mask) if mask is not None else arr
+    return pa.RecordBatch.from_arrays(
+        [decoded[n] for n in out_names], names=out_names
+    )
 
 
 def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
@@ -1103,77 +1177,19 @@ def decode_table(blocks_df, schema_ddl: str, zone_filter=None, row_filter=None):
         missing = set(needed) - set(blocks_df.columns)
         if missing:
             raise ValueError(f"blocks table lacks columns for {sorted(missing)}")
-
-        def decode_wide(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for b in batches:
-                for row in range(b.num_rows):
-                    def pair(n):
-                        return (
-                            b.column(b.schema.get_field_index(f"c_{n}__meta"))[row].as_py(),
-                            b.column(b.schema.get_field_index(f"c_{n}__data"))[row].as_py(),
-                        )
-
-                    def col(n):
-                        return decode_column(*pair(n))
-
-                    # codec-aware: each conjunct evaluates on the code
-                    # stream where the codec allows, so a zero-match
-                    # block skips without materializing a value
-                    fr = apply_row_filters(rfs, pair, out_names)
-                    if fr is None:
-                        continue  # zero matches: skip every other kernel
-                    mask, selected = fr
-                    arrays = [
-                        selected[n] if n in selected
-                        else (col(n) if mask is None else col(n).filter(mask))
-                        for n in out_names
-                    ]
-                    yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
         # the select is what lets the parquet scan prune payload columns
-        return blocks_df.select(*needed).mapInArrow(decode_wide, schema_ddl)
-
-    wanted = set(out_names)
+        blocks_df = blocks_df.select(*needed)
+    else:
+        blocks_df = blocks_df.select("cols")
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            cols_col = b.column(b.schema.get_field_index("cols"))
             for row in range(b.num_rows):
-                # zero-copy struct view of this block's entries; only the
-                # REQUESTED columns' payload bytes are ever materialized
-                # (``as_py`` on the whole struct would copy every column's
-                # payload just to decode a subset)
-                entries = cols_col[row].values
-                names = entries.field("name").to_pylist()
-                metas = entries.field("meta")
-                datas = entries.field("data")
-                missing = wanted - set(names)
-                if missing:
-                    # mirror the wide path's explicit missing-column error
-                    # (a bare KeyError from an executor is undiagnosable)
-                    raise ValueError(
-                        f"blocks table lacks encoded column(s) {sorted(missing)}; "
-                        f"blocks contain {sorted(names)}"
-                    )
-                fr = apply_row_filters(
-                    rfs,
-                    lambda c: (
-                        metas[names.index(c)].as_py(),
-                        datas[names.index(c)].as_py(),
-                    ),
-                    out_names,
-                )
-                if fr is None:
-                    continue  # zero matches: skip every other kernel
-                mask, decoded = fr
-                for i, nm in enumerate(names):
-                    if nm in wanted and nm not in decoded:
-                        arr = decode_column(metas[i].as_py(), datas[i].as_py())
-                        decoded[nm] = arr.filter(mask) if mask is not None else arr
-                arrays = [decoded[n] for n in out_names]
-                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+                out = decode_block(b, row, out_names, rfs)
+                if out is not None:
+                    yield out
 
-    return blocks_df.select("cols").mapInArrow(decode_fn, schema_ddl)
+    return blocks_df.mapInArrow(decode_fn, schema_ddl)
 
 
 def blocks_metadata(blocks_df):

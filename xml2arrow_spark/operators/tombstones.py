@@ -66,6 +66,7 @@ __all__ = [
     "pending_units",
     "pending_count",
     "tombstones_df",
+    "pending_ids_local",
     "clear_units",
     "apply_tombstones",
     "refuse_pending",
@@ -234,6 +235,21 @@ def tombstones_df(
     if units is not None:
         df = df.filter(F.col("unit_id").isin(sorted(dirs)))
     return df.select(id_col).distinct()
+
+
+def pending_ids_local(path: str, units: list[int], id_col: str = "doc_id"):
+    """Driver-side twin of ``tombstones_df(units=...)`` for point reads:
+    the pending tombstoned ids of ``units`` as a list of pyarrow arrays,
+    read one ``unit_id=<u>`` partition at a time (ids only — metadata
+    scale), or ``None`` when none of those units has anything pending."""
+    import pyarrow.dataset as pads
+
+    dirs = _unit_dirs(path)
+    chunks = []
+    for u in sorted({int(x) for x in units} & dirs.keys()):
+        t = pads.dataset(dirs[u], format="parquet").to_table(columns=[id_col])
+        chunks.extend(t.column(id_col).chunks)
+    return chunks or None
 
 
 def clear_units(path: str, units: list[int]) -> None:

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from xml2arrow_spark.manifest import read_sidecar
 from xml2arrow_spark.pipeline import sqlgen as G
 
 __all__ = ["kmv_distinct", "kmv_token_vocab", "group_distinct_est",
@@ -203,7 +204,6 @@ def group_distinct_est(
 
     import numpy as np
     import pyarrow as pa
-    import yaml
 
     from xml2arrow_spark.operators.blocks import decode_column
     from xml2arrow_spark.operators.dataset import (
@@ -224,8 +224,7 @@ def group_distinct_est(
     # rows would silently misreport (the same contract every metadata-
     # accelerated aggregate in operators/dataset.py enforces)
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     if column not in by_name:
         raise ValueError(
@@ -544,7 +543,6 @@ def group_distinct(
 
     import numpy as np
     import pyarrow as pa
-    import yaml
 
     from xml2arrow_spark.operators.blocks import decode_column
     from xml2arrow_spark.operators.dataset import (
@@ -562,8 +560,7 @@ def group_distinct(
     if max_pairs < 1:
         raise ValueError(f"group_distinct needs max_pairs >= 1, got {max_pairs}")
     _refuse_pending_tombstones(out_path)
-    with open(os.path.join(out_path, MANIFEST_SIDECAR)) as f:
-        side = yaml.safe_load(f.read())
+    side = read_sidecar(os.path.join(out_path, MANIFEST_SIDECAR))
     by_name = split_schema_ddl(side["schema_ddl"])
     if column not in by_name:
         raise ValueError(
